@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ficaria_spark.plans.lineage import write_json_atomic
+
 _TRANSFORM_RE = re.compile(r"^(bucket)\((\d+),\s*(\w+)\)$|^(days)\((\w+)\)$|^(\w+)$")
 
 
@@ -120,8 +122,8 @@ class Catalog:
             "mode": mode,
         }
         os.makedirs(self._meta_dir(name), exist_ok=True)
-        with open(os.path.join(self._meta_dir(name), f"v{version:05d}.json"), "w") as fh:
-            json.dump(snapshot, fh)
+        write_json_atomic(
+            os.path.join(self._meta_dir(name), f"v{version:05d}.json"), snapshot)
         return snapshot
 
     # -- read -------------------------------------------------------------------

@@ -1,1 +1,1 @@
-"""Execution-plan utilities: lineage manifests, checkpoint resume, metrics."""
+"""Execution-plan utilities: lineage manifests, checkpoint resume, caches, layout."""

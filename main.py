@@ -13,7 +13,8 @@ failure resumes from the completed buckets only:
   token-passthrough feature pipeline, bucketed by entity.
 * ``--job tokens`` — the training-data production pipeline (exact dedup →
   n-gram decontamination → quality gate → per-source mix weights →
-  fixed-context sequence packing), bucketed by pack id.
+  fixed-context sequence packing), bucketed by the pack key
+  ``(source, pack_id)`` (``pack_id`` restarts in every source).
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ def main() -> int:
         entity_col = "entity_id"
     else:
         df = QUERIES["pipeline_tokens"](spark, args.input_dir)
-        entity_col = "pack_id"
+        entity_col = ("source", "pack_id")
     summary = run_with_manifests(
         df, entity_col=entity_col, out_dir=args.out_dir,
         n_buckets=args.n_buckets,

@@ -7,7 +7,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ficaria_spark.plans.lineage import (
-    StageMetrics,
+    MANIFEST_DIR,
+    bucket_of,
     read_manifests,
     read_output,
     run_with_manifests,
@@ -64,12 +65,123 @@ def test_resume_recomputes_only_failed_buckets(spark, tmp_path):
     assert s3["completed"] == [] and sorted(s3["skipped"]) == [0, 1, 2, 3]
 
 
-def test_stage_metrics(spark):
-    sdf, pdf = _events(spark)
-    m = StageMetrics()
-    m.measure("scan", sdf)
-    assert m.stages["scan"]["rows"] == len(pdf)
-    assert m.stages["scan"]["rows_per_sec"] > 0
+def test_transform_runs_once_per_run(spark, tmp_path):
+    """One pass: the query is planned and executed once per run, not once
+    per bucket — and not at all when nothing is pending."""
+    sdf, _ = _events(spark, seed=6)
+    out = str(tmp_path / "once")
+    calls = []
+
+    def transform(d):
+        calls.append(1)
+        return d
+
+    run_with_manifests(sdf, entity_col="entity", out_dir=out, n_buckets=4,
+                       transform=transform, fail_on=lambda b: b == 1)
+    assert len(calls) == 1
+    s = run_with_manifests(sdf, entity_col="entity", out_dir=out, n_buckets=4,
+                           transform=transform)
+    assert s["completed"] == [1] and len(calls) == 2
+    run_with_manifests(sdf, entity_col="entity", out_dir=out, n_buckets=4,
+                       transform=transform)
+    assert len(calls) == 2
+
+
+def test_manifest_counts_and_checksums_match_input(spark, tmp_path):
+    """Pins the checksum definition: bit_xor(xxhash64(data columns in file
+    order)) per bucket, equal to a direct aggregate over the input."""
+    sdf, _ = _events(spark, seed=7)
+    out = str(tmp_path / "sums")
+    run_with_manifests(sdf, entity_col="entity", out_dir=out, n_buckets=4)
+    want = {
+        r["b"]: (r["n"], r["c"])
+        for r in sdf.groupBy(bucket_of("entity", 4).alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.bit_xor(F.xxhash64(*sdf.columns)).alias("c"))
+        .collect()
+    }
+    got = {b: (m["row_count"], m["checksum"])
+           for b, m in read_manifests(out).items()}
+    assert len(want) == 4 and got == want
+
+
+def test_empty_bucket_gets_ok_manifest_and_is_skipped(spark, tmp_path):
+    sdf, pdf = _events(spark, seed=8)
+    few = sdf.where(F.col("entity") < 2)  # two entities, at most 2 of 8 buckets
+    out = str(tmp_path / "empty")
+    s1 = run_with_manifests(few, entity_col="entity", out_dir=out, n_buckets=8)
+    manifests = read_manifests(out)
+    assert s1["completed"] == list(range(8)) and s1["failed"] == []
+    empty = [b for b, m in manifests.items() if m["row_count"] == 0]
+    assert len(empty) >= 6
+    assert all(manifests[b]["status"] == "ok" and manifests[b]["checksum"] == 0
+               for b in empty)
+    s2 = run_with_manifests(few, entity_col="entity", out_dir=out, n_buckets=8)
+    assert s2["completed"] == [] and s2["skipped"] == list(range(8))
+    assert read_output(spark, out).count() == int((pdf.entity < 2).sum())
+
+
+def test_rerun_removes_stale_rows_of_pending_buckets(spark, tmp_path):
+    """A recomputed bucket keeps only its new rows — also when it is now
+    empty, which the partitioned write alone would never overwrite."""
+    sdf, pdf = _events(spark, seed=9)
+    few = sdf.where(F.col("entity") < 2)
+    out = tmp_path / "stale"
+    run_with_manifests(few, entity_col="entity", out_dir=str(out), n_buckets=8)
+    manifests = read_manifests(str(out))
+    full = next(b for b, m in manifests.items() if m["row_count"] > 0)
+    empty = next(b for b, m in manifests.items() if m["row_count"] == 0)
+    stale = few.limit(7)
+    for b in (full, empty):
+        stale.write.mode("append").parquet(str(out / f"part_bucket={b}"))
+        (out / MANIFEST_DIR / f"bucket_{b:05d}.json").unlink()
+    s = run_with_manifests(few, entity_col="entity", out_dir=str(out), n_buckets=8)
+    assert sorted(s["completed"]) == sorted([full, empty])
+    assert not (out / f"part_bucket={empty}").exists()
+    assert read_output(spark, str(out)).count() == int((pdf.entity < 2).sum())
+    def sums(ms):
+        return {b: (m["row_count"], m["checksum"]) for b, m in ms.items()}
+
+    assert sums(read_manifests(str(out))) == sums(manifests)
+
+
+def test_truncated_manifest_is_recomputed(spark, tmp_path):
+    """A crash inside a manifest write used to leave a truncated file that
+    made every later resume raise; now its bucket is simply pending, and a
+    leftover ``.tmp`` file is ignored."""
+    sdf, pdf = _events(spark, seed=10)
+    out = tmp_path / "trunc"
+    run_with_manifests(sdf, entity_col="entity", out_dir=str(out), n_buckets=4)
+    mdir = out / MANIFEST_DIR
+    (mdir / "bucket_00001.json").write_text('{"bucket": 1, "row_co')
+    (mdir / "bucket_00002.json.tmp").write_text('{"bucket": 2, "sta')
+    s = run_with_manifests(sdf, entity_col="entity", out_dir=str(out), n_buckets=4)
+    assert s["completed"] == [1] and s["skipped"] == [0, 2, 3]
+    assert read_manifests(str(out))[1]["status"] == "ok"
+    assert read_output(spark, str(out)).count() == len(pdf)
+
+
+def test_main_tokens_job_spreads_buckets_and_resumes(spark, sf_dir, tmp_path,
+                                                     monkeypatch, capsys):
+    """The tokens job buckets by the pack key (source, pack_id): pack_id
+    restarts in every source, so pack_id alone put every row in one bucket.
+    A second submit skips every bucket."""
+    import json
+
+    import main
+
+    out = str(tmp_path / "tokens")
+    argv = ["main.py", "--job", "tokens", "--n-buckets", "4",
+            "--input-dir", sf_dir, "--out-dir", out]
+    monkeypatch.setattr("sys.argv", argv)
+    assert main.main() == 0
+    manifests = read_manifests(out)
+    assert len(manifests) == 4
+    assert sum(m["row_count"] > 0 for m in manifests.values()) > 1
+    capsys.readouterr()
+    assert main.main() == 0
+    second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert second["completed"] == [] and second["skipped"] == [0, 1, 2, 3]
 
 
 def test_session_window_semantics_match_batch_sessionize(spark):
