@@ -230,11 +230,7 @@ def _vec_matrix(list_arr, dim: int) -> np.ndarray:
 def _topk_block(S: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """Per-row top-k of a score block by (value desc, column asc) — the
     window tie policy, provided columns are pre-sorted ascending by
-    neighbor id. argpartition + bounded stable sort (O(n) per row, not the
-    O(n log n) full argsort — 20k-wide rows measured ~2.5 ms each); rows
-    where a value tie straddles the k boundary (kth value appears more than
-    k times) fall back to an exact full stable sort. Returns (idx, vals)
-    of shape (rows, min(k, cols)).
+    neighbor id. Returns (idx, vals) of shape (rows, min(k, cols)).
 
     CONSUMES ``S`` (overwrites it): selection runs as ``min(k, cols)``
     argmin passes over the negated block — argmin's first-occurrence rule
@@ -679,9 +675,8 @@ def ivf_ann_topk(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embed
             N = N / np.sqrt((N * N).sum(axis=1))[:, None]
         S = Q @ N.T
         S[qids[:, None] == nids[None, :]] = -np.inf  # exclude self
-        # argpartition + bounded stable sort, exact full-sort fallback on
-        # value ties at the k boundary (shared _topk_block helper; O(nn)
-        # per row instead of O(nn log nn))
+        # k argmin passes (shared _topk_block helper; first occurrence
+        # resolves value ties by neighbor id asc)
         order, vals = _topk_block(S, k)
         kk = order.shape[1]
         rows = np.repeat(qids, kk)

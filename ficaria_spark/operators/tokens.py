@@ -138,9 +138,12 @@ def pack_segments(df: DataFrame, *, context_len: int,
     # repartition, pinning the tokenizer to the raw scan partitions. A
     # zero-__n row contributes 0 to every prefix sum and the conditional
     # explode below emits nothing for it, so the output is identical.
+    # Negative counts clamp to 0 as well: kept, they would pull every later
+    # doc's prefix-sum offset back, so packs would overlap or go negative.
     pre = df.select(by, id_col, *extra,
-                    F.coalesce(F.col(n_tok_col).cast("long"),
-                               F.lit(0)).alias("__n"))
+                    F.greatest(F.lit(0), F.coalesce(
+                        F.col(n_tok_col).cast("long"),
+                        F.lit(0))).alias("__n"))
     base = (_offsets_two_level(pre, by, order_col, num_buckets)
             if num_buckets else _offsets_window(pre, by, order_col))
     first = F.floor(F.col("__off") / L)

@@ -10,8 +10,11 @@ One pass per run: the query executes ONCE for all pending buckets — one
 ``partitionBy("part_bucket")`` write job with dynamic partition overwrite
 (finished buckets and ``_manifests/`` stay untouched), then ONE aggregate
 over the pending buckets' written files gives every bucket's row count and
-checksum. Failure granularity: ``fail_on`` fails single buckets before the
-write; a failure of the shared write fails every pending bucket.
+checksum. That read-back passes the schema the write just used, so it starts
+no schema-inference job; it still scans every written row, so the audit
+checks what is on disk. Failure granularity: ``fail_on`` fails single
+buckets before the write; a failure of the shared write fails every pending
+bucket.
 
 Manifests are replaced atomically (tmp file + ``os.replace``), and an
 unreadable manifest counts as pending, so a crash never blocks a resume.
@@ -31,6 +34,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifests"
 
@@ -77,17 +81,25 @@ def read_manifests(out_dir: str) -> dict[int, dict]:
     return out
 
 
-def _bucket_stats(spark: SparkSession, out_dir: str,
-                  buckets: list[int]) -> dict[int, tuple[int, int]]:
+def _bucket_stats(spark: SparkSession, out_dir: str, buckets: list[int],
+                  schema: T.StructType) -> dict[int, tuple[int, int]]:
     """{bucket: (row_count, checksum)} from one aggregate over the written
     files of ``buckets``; checksum = ``bit_xor(xxhash64(data columns in file
-    order))``. Buckets without a directory wrote no rows."""
+    order))``. ``schema`` is the written frame's: its data columns in file
+    order, plus ``part_bucket int``, are exactly the files' columns, so the
+    read passes them and starts no schema-inference job. The aggregate
+    still scans every written row. Buckets without a directory wrote no
+    rows."""
     paths = [p for p in (_bucket_dir(out_dir, b) for b in buckets)
              if os.path.isdir(p)]
     if not paths:
         return {}
-    written = spark.read.option("basePath", out_dir).parquet(*paths)
-    data_cols = [c for c in written.columns if c != "part_bucket"]
+    data = [f for f in schema.fields if f.name != "part_bucket"]
+    read_schema = T.StructType(
+        [*data, T.StructField("part_bucket", T.IntegerType())])
+    written = (spark.read.schema(read_schema).option("basePath", out_dir)
+               .parquet(*paths))
+    data_cols = [f.name for f in data]
     rows = (written.groupBy("part_bucket")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.bit_xor(F.xxhash64(*data_cols)).alias("c"))
@@ -112,9 +124,10 @@ def run_with_manifests(
     recomputed in one pass: their old ``part_bucket=<b>`` directories are
     removed (a bucket that is now empty keeps no stale rows), the query runs
     once, filtered to them, into one partitioned write, and one aggregate
-    over their written files yields each manifest's ``row_count`` and
-    ``checksum``. An empty bucket gets an ok manifest with 0 rows. Every
-    ok manifest's ``wall_sec`` is the wall time of that shared pass.
+    over their written files, read back with the schema just written,
+    yields each manifest's ``row_count`` and ``checksum``. An empty bucket
+    gets an ok manifest with 0 rows. Every ok manifest's ``wall_sec`` is the
+    wall time of that shared pass.
 
     ``fail_on(bucket)`` is a test hook to simulate a crash: it marks the
     bucket failed before the write, which leaves it out. A failure of the
@@ -151,7 +164,7 @@ def run_with_manifests(
          # static overwrite would delete _manifests/ and every finished bucket
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("part_bucket").parquet(out_dir))
-        stats = _bucket_stats(df.sparkSession, out_dir, todo)
+        stats = _bucket_stats(df.sparkSession, out_dir, todo, out.schema)
     except Exception as e:  # record the failure on every pending bucket
         for b in todo:
             fail(b, str(e))

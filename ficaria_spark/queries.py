@@ -803,8 +803,6 @@ def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     underestimates (CMS guarantee, also asserted by pytest)."""
     from ficaria_spark.operators.sketch import cms_estimate, count_min_sketch
 
-    from ficaria_spark.plans.layout import widen_thin_input
-
     seqs = datagen.tokenized_sequences(spark, sf_dir, widen=True)
     tok = seqs.select(F.explode("tokens").alias("token"))
     # r7: ONE explode + aggregation pass over the token stream. The exact

@@ -105,6 +105,40 @@ def test_manifest_counts_and_checksums_match_input(spark, tmp_path):
     assert len(want) == 4 and got == want
 
 
+def test_manifest_checksums_equal_an_inferring_read_back(spark, tmp_path):
+    """The runner reads its output back with the schema it wrote. Each
+    manifest must equal bit_xor(xxhash64(data columns in file order)) over a
+    plain, schema-inferring read of the same ``part_bucket=<b>`` dirs — also
+    with ``part_bucket`` mid-frame and typed, nullable and non-null columns."""
+    sdf, _ = _events(spark, seed=11)
+    out = tmp_path / "inferred"
+
+    def transform(d):
+        return d.select(
+            "v", "part_bucket", "entity",
+            F.when(F.col("rid") % 3 == 0, F.lit(None))
+            .otherwise(F.col("rid").cast("string")).alias("s"),
+            F.lit(1).alias("one"),
+            F.col("v").cast("decimal(12,4)").alias("dec"),
+            F.timestamp_seconds(F.col("rid")).alias("ts"),
+            F.array(F.col("rid"), F.col("entity")).alias("arr"))
+
+    run_with_manifests(sdf, entity_col="entity", out_dir=str(out),
+                       n_buckets=4, transform=transform)
+    manifests = read_manifests(str(out))
+    for b, m in manifests.items():
+        path = out / f"part_bucket={b}"
+        if not path.exists():
+            assert m["row_count"] == 0 and m["checksum"] == 0
+            continue
+        plain = spark.read.parquet(str(path))
+        assert plain.columns == ["v", "entity", "s", "one", "dec", "ts", "arr"]
+        r = plain.agg(F.count(F.lit(1)).alias("n"),
+                      F.bit_xor(F.xxhash64(*plain.columns)).alias("c")).collect()[0]
+        assert (m["row_count"], m["checksum"]) == (r["n"], r["c"])
+    assert sum(m["row_count"] for m in manifests.values()) == sdf.count()
+
+
 def test_empty_bucket_gets_ok_manifest_and_is_skipped(spark, tmp_path):
     sdf, pdf = _events(spark, seed=8)
     few = sdf.where(F.col("entity") < 2)  # two entities, at most 2 of 8 buckets

@@ -379,8 +379,9 @@ def test_cosine_topk_broadcast_path_equals_shuffle_path(spark):
     mapInArrow kernel (zero exchanges). Both paths — and the expression
     baseline — must agree on (query, neighbor, rank), INCLUDING exact-tie
     rows: duplicated vectors make several neighbors share a bit-identical
-    cosine at the k-boundary, exercising the kernel's argpartition tie
-    fallback (ties must resolve by neighbor_id asc, the window policy)."""
+    cosine at the k-boundary, exercising the kernel's argmin passes, whose
+    first-occurrence rule must resolve ties by neighbor_id asc, the window
+    policy."""
     rng = np.random.default_rng(11)
     base = rng.normal(size=(12, 8))
     # rows 0..11 unique, 12..23 duplicate them → every query sees its twin

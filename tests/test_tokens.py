@@ -116,6 +116,25 @@ def test_pack_segments_two_level_offsets_match_window(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def test_pack_segments_clamps_negative_counts(spark):
+    """A doc with a negative ``n_tok`` packs like an empty doc on both offset
+    paths: it gets no segment and leaves every later doc's offsets alone."""
+    _, pdf = _seqs(spark, n=30, seed=4)
+    neg = pdf.copy()
+    neg.loc[3, "n_tok"] = -7
+    zero = pdf.copy()
+    zero.loc[3, "n_tok"] = 0
+    key = ["source", "pack_id", "doc_id"]
+    for nb in (None, 5):
+        got = pack_segments(spark.createDataFrame(neg), context_len=L,
+                            num_buckets=nb).orderBy(*key).toPandas()
+        exp = pack_segments(spark.createDataFrame(zero), context_len=L,
+                            num_buckets=nb).orderBy(*key).toPandas()
+        assert "d003" not in set(got.doc_id)
+        assert (got.pack_off >= 0).all() and (got.doc_off >= 0).all()
+        pd.testing.assert_frame_equal(got, exp)
+
+
 def test_token_ngrams_matches_python(spark):
     from collections import Counter
 
